@@ -327,18 +327,36 @@ def resolve_url(base: str | None, href: str) -> str | None:
     relative and no absolute base is available — a frontier consumer must
     treat None as an unusable edge, never as a literal URL.  Absolute
     references (including non-hierarchical ones like mailto:/javascript:)
-    pass through untouched."""
+    pass through untouched; malformed ones (urlsplit raises, e.g. an
+    unclosed IPv6 bracket) give None."""
+    return _resolve_href(href, base, _base_ok(base))
+
+
+def _base_ok(base: str | None) -> bool:
+    """True when `base` can anchor a relative reference (has a scheme)."""
+    from urllib.parse import urlsplit
+
+    try:
+        return bool(base) and bool(urlsplit(base).scheme)
+    except ValueError:
+        return False
+
+
+def _resolve_href(href: str, base: str | None, base_ok: bool) -> str | None:
+    """resolve_url for one href, with the base check `_base_ok(base)`
+    done once by the caller."""
     from urllib.parse import urljoin, urlsplit
 
     href = href.strip()
     # fast path: the overwhelmingly common absolute forms skip urlsplit
-    # (http://x and https://x have a scheme by construction)
-    if href.startswith("http://") or href.startswith("https://"):
+    # (http://x and https://x have a scheme by construction); a bracket
+    # may open an IPv6 host, which only urlsplit validates
+    if href.startswith(("http://", "https://")) and "[" not in href and "]" not in href:
         return href
     try:
         if urlsplit(href).scheme:
             return href
-        if not base or not urlsplit(base).scheme:
+        if not base_ok:
             return None
         return urljoin(base, href)
     except ValueError:
@@ -418,30 +436,10 @@ def _resolve_links(
     hoisted out of the per-link loop (the base is one string per page;
     urllib's 20-entry parse cache thrashes once a page has more hrefs
     than that)."""
-    from urllib.parse import urljoin, urlsplit
-
-    try:
-        base_ok = bool(base) and bool(urlsplit(base).scheme)
-    except ValueError:
-        base_ok = False
-
-    def resolve(href: str) -> str | None:
-        # same per-link semantics as resolve_url: an absolute href wins
-        # regardless of the base; a relative href needs a valid base
-        href = href.strip()
-        if href.startswith("http://") or href.startswith("https://"):
-            return href
-        try:
-            if urlsplit(href).scheme:
-                return href
-            if not base_ok:
-                return None
-            return urljoin(base, href)
-        except ValueError:
-            return None
-
+    base_ok = _base_ok(base)
     return [
-        (o, href, anchor, nf, resolve(href)) for o, href, anchor, nf in links
+        (o, href, anchor, nf, _resolve_href(href, base, base_ok))
+        for o, href, anchor, nf in links
     ]
 
 

@@ -195,6 +195,61 @@ class TaggedLine:
                 break
 
 
+class TaggedWord(TaggedLine):
+    """The word a `WrappedBlock` is building, at O(1) per appended fragment.
+
+    `TaggedLine.push_str` merges a same-tag fragment with `prev.s += s`,
+    which copies the whole span: a word fed one char or one run at a time
+    costs O(n²).  Here the fragments of the trailing same-tag run are kept
+    in `parts` and joined once by `seal()`; after `seal()`, `v` holds
+    exactly the spans `TaggedLine` would have built.  The word's display
+    width is tracked by the caller (`WrappedBlock.wordlen`), not in `len`.
+    """
+
+    __slots__ = ("parts", "ptag")
+
+    def __init__(self):
+        super().__init__()
+        self.parts: list[str] = []
+        self.ptag = None
+
+    def push_text(self, s: str, tag) -> None:
+        if s:
+            if self.parts and tag != self.ptag:
+                self.seal()
+            self.parts.append(s)
+            self.ptag = tag
+
+    push_char = push_text
+
+    def push_str(self, ts: TaggedString) -> None:
+        self.push_text(ts.s, ts.tag)
+
+    def push(self, elt) -> None:
+        if type(elt) is TaggedString:
+            self.push_text(elt.s, elt.tag)
+        else:
+            self.seal()
+            self.v.append(elt)
+
+    def seal(self) -> None:
+        """Join the trailing same-tag run into one span of `v`."""
+        if self.parts:
+            self.v.append(TaggedString("".join(self.parts), self.ptag))
+            self.parts = []
+
+    def is_empty(self) -> bool:
+        return not self.parts and super().is_empty()
+
+    def has_items(self) -> bool:
+        """True once anything (text or a fragment marker) was pushed."""
+        return bool(self.parts or self.v)
+
+    def remove_items(self) -> list:
+        self.seal()
+        return super().remove_items()
+
+
 # --- border lines -----------------------------------------------------------
 
 # Border segments (text_renderer.rs:948-976)

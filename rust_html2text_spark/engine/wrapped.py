@@ -7,12 +7,23 @@ wrapping of overlong words with TooNarrow on unsplittable wide chars.
 
 White-space modes are carried per-span as `(tag, ws_mode)` tuples, matching
 the Rust `WithWhiteSpace<T>` wrapper.
+
+Cost invariant: a block costs time linear in the text it receives, however
+long a word grows (a `<pre>` line, an unbroken token).  The reference gets
+this for free: its word is a `String`, whose push is amortized O(1).  In
+Python, `span.s += s` on an attribute copies the whole string every time,
+so nothing here grows a word or walks a remainder that way:
+- the word is a `TaggedWord`, which keeps fragments and joins each
+  same-tag run once, when the word is flushed or hard-wrapped;
+- Pre mode appends each printable-ASCII-plus-space segment in one push;
+- `flush_word_hard_wrap` cuts width-1 pieces a line at a time and walks
+  other pieces by index, never re-slicing the remainder.
 """
 
 from __future__ import annotations
 
 from .errors import TooNarrow
-from .taggedline import FragmentStart, TaggedLine, TaggedString
+from .taggedline import FragmentStart, TaggedLine, TaggedString, TaggedWord
 from .textutil import (
     always_takes_space,
     char_width,
@@ -35,8 +46,8 @@ _NORMAL_RUNS = _re.compile(
 _SIMPLE_TEXT = _re.compile(r"[!-~ \t\n\r\x0b\x0c]*\Z")
 _ASCII_WS = " \t\n\r\x0b\x0c"
 _WORD_RUN = _re.compile(r"[!-~]+")
-# pre mode: printable run | space run | other (incl \n, \t, unicode)
-_PRE_RUNS = _re.compile(r"([!-~]+)|( +)|(.)", _re.S)
+# pre mode: printable ASCII + space run | other (incl \n, \t, unicode)
+_PRE_RUNS = _re.compile(r"([ -~]+)|(.)", _re.S)
 
 
 def preserve_whitespace(ws_mode: int) -> bool:
@@ -63,7 +74,7 @@ class WrappedBlock:
         self.text: list[TaggedLine] = []
         self.line = TaggedLine()  # spans tagged (tag, ws_mode)
         self.spacetag = None  # (tag, ws_mode) for whitespace before current word
-        self.word = TaggedLine()
+        self.word = TaggedWord()
         self.wordlen = 0
         self.wslen = 0
         self.pre_wrapped = False
@@ -75,6 +86,7 @@ class WrappedBlock:
 
     def flush_word(self) -> None:
         if not self.word.is_empty():
+            self.word.seal()
             ws_mode = WS_NORMAL
             for e in self.word.v:
                 if isinstance(e, TaggedString):
@@ -127,43 +139,58 @@ class WrappedBlock:
         self.wordlen = 0
 
     def flush_word_hard_wrap(self) -> None:
-        """text_renderer.rs:589-644."""
+        """text_renderer.rs:589-644.
+
+        The reference walks each piece char by char; here a piece of
+        printable ASCII (every char width 1) is cut `lineleft` chars at a
+        time, and any other piece is walked by index from the cut point.
+        Either way each char is visited once."""
         lineleft = self.width - self.line.len
         for element in self.word.remove_items():
-            if isinstance(element, TaggedString):
-                piece_s = element.s
-                piece_tag = element.tag
-                w = element.width()
-                wpos = 0
-                bpos = 0  # char index of already-copied pieces
-                while w - wpos > lineleft:
-                    split_idx = 0
-                    for idx, c in enumerate(piece_s[bpos:]):
-                        c_w = char_width(c)
+            if type(element) is not TaggedString:
+                continue  # fragment markers inside a wrapped word are dropped
+            piece_s = element.s
+            piece_tag = element.tag
+            w = element.width()
+            n = len(piece_s)
+            ascii1 = piece_s.isascii() and piece_s.isprintable()
+            wpos = 0
+            bpos = 0  # char index of already-copied pieces
+            while w - wpos > lineleft:
+                if ascii1 and lineleft > 0:
+                    # the first `lineleft` chars fit, the next one does not
+                    end = bpos + lineleft
+                    wpos += lineleft
+                else:
+                    end = bpos
+                    while end < n:
+                        c_w = char_width(piece_s[end])
                         if c_w <= lineleft:
                             lineleft -= c_w
                             wpos += c_w
-                        else:
-                            if idx == 0 and self.line.width() == 0:
-                                if self.allow_overflow:
-                                    split_idx = 1
-                                    wpos += c_w
-                                    break
-                                raise TooNarrow()
-                            split_idx = idx
-                            break
-                    self.line.push(
-                        TaggedString(piece_s[bpos : bpos + split_idx], piece_tag)
-                    )
-                    bpos += split_idx
-                    self.force_flush_line()
-                    lineleft = self.width
-                if bpos == 0:
-                    self.line.push(element)
-                    lineleft -= w
-                elif bpos < len(piece_s):
-                    self.line.push(TaggedString(piece_s[bpos:], piece_tag))
-                    lineleft -= max(w - wpos, 0)
+                            end += 1
+                            continue
+                        if end == bpos and self.line.width() == 0:
+                            if self.allow_overflow:
+                                end += 1
+                                wpos += c_w
+                                break
+                            raise TooNarrow()
+                        break
+                    else:
+                        # no char overflowed (only width -1 control chars
+                        # can cause that): split at 0, like the reference
+                        end = bpos
+                self.line.push(TaggedString(piece_s[bpos:end], piece_tag))
+                bpos = end
+                self.force_flush_line()
+                lineleft = self.width
+            if bpos == 0:
+                self.line.push(element)
+                lineleft -= w
+            elif bpos < n:
+                self.line.push(TaggedString(piece_s[bpos:], piece_tag))
+                lineleft -= max(w - wpos, 0)
 
     def flush_line(self) -> None:
         if not self.line.is_empty():
@@ -189,7 +216,7 @@ class WrappedBlock:
     def take_trailing_fragments(self) -> list:
         if self.word.is_empty():
             items = self.word.v
-            self.word = TaggedLine()
+            self.word = TaggedWord()
             return list(items)
         return []
 
@@ -292,12 +319,12 @@ class WrappedBlock:
             # rules.  A buffered word (a span boundary fell mid-word, the
             # inline-markup case) is first continued/flushed exactly as
             # the per-word buffered path would.
-            if self.word.v:
+            if self.word.has_items():
                 m = _WORD_RUN.match(text)
                 if m:
                     g = m.group()
                     self.wordlen += len(g)
-                    self.word.push_str(TaggedString(g, wtag))
+                    self.word.push_text(g, wtag)
                     if m.end() == len(text):
                         return
                     self.flush_word()
@@ -310,7 +337,7 @@ class WrappedBlock:
                     # text starts with whitespace: the per-word ws-run
                     # branch flushes the buffered word first
                     self.flush_word()
-            if not self.word.v and (
+            if not self.word.has_items() and (
                 self.wslen == 0
                 or (self.wslen == 1 and self.spacetag == wtag)
             ):
@@ -322,7 +349,7 @@ class WrappedBlock:
                 complete = g_ws is not None  # ASCII ws follows
                 if (
                     complete
-                    and not self.word.v
+                    and not self.word.has_items()
                     and (
                         self.wslen == 0
                         or (self.wslen == 1 and self.spacetag[1] == WS_NORMAL)
@@ -352,7 +379,7 @@ class WrappedBlock:
                         if wl <= width:
                             self.line.push_str(TaggedString(g, wtag))
                         else:
-                            self.word.push_str(TaggedString(g, wtag))
+                            self.word.push_text(g, wtag)
                             self.flush_word_hard_wrap()
                     # the trailing whitespace run: set the pending space
                     if self.line.len > 0:
@@ -361,7 +388,7 @@ class WrappedBlock:
                     continue
                 # buffered path
                 self.wordlen += len(g)
-                self.word.push_str(TaggedString(g, wtag))
+                self.word.push_text(g, wtag)
                 if complete:
                     if self.wordlen > 0:
                         self.flush_word()
@@ -444,7 +471,7 @@ class WrappedBlock:
                     chunk = [g]
                     chunklen = wl
                 else:
-                    self.word.push_str(TaggedString(g, wtag))
+                    self.word.push_text(g, wtag)
                     self.flush_word_hard_wrap()
                     line = self.line
                     pend = 1 if line.len > 0 else 0
@@ -460,34 +487,35 @@ class WrappedBlock:
         if text[-1] not in _ASCII_WS:
             g = words[-1]
             self.wordlen += len(g)
-            self.word.push_str(TaggedString(g, wtag))
+            self.word.push_text(g, wtag)
 
     def _add_text_pre_sametag(self, text: str, tag) -> None:
         """Bulk variant of the WhiteSpace::Pre loop for main_tag == wrap_tag:
-        printable-ASCII runs and space runs append whole; \\n, \\t and
-        non-ASCII fall back to the exact per-char logic."""
+        each maximal run of printable ASCII and spaces is one push; \\n,
+        \\t and other chars fall back to the exact per-char logic."""
         wtag = (tag, WS_PRE)
         width = self.width
         for m in _PRE_RUNS.finditer(text):
-            g, g_sp, c = m.groups()
-            if g is not None:  # printable ASCII run (no whitespace)
-                wl = len(g)
-                self.wordlen += wl
-                # per-char sets pre_wrapped when the width is first
-                # exceeded; with equal tags only the final state matters
-                if self.line.len + self.wslen + self.wordlen > width:
-                    self.pre_wrapped = True
-                self.word.push_str(TaggedString(g, wtag))
-                continue
-            if g_sp is not None:  # run of plain spaces
+            g, c = m.groups()
+            if g is not None:  # printable ASCII and spaces, all width 1
                 if self.word.is_empty():
-                    self.wslen += len(g_sp)
-                    self.spacetag = wtag
-                else:
-                    # in-word whitespace: no pre_wrapped width check
-                    # (only non-whitespace chars trigger it, rs:790-805)
-                    self.wordlen += len(g_sp)
-                    self.word.push_str(TaggedString(g_sp, wtag))
+                    # leading spaces of a word are pending whitespace
+                    rest = g.lstrip(" ")
+                    if len(rest) < len(g):
+                        self.wslen += len(g) - len(rest)
+                        self.spacetag = wtag
+                        if not rest:
+                            continue
+                        g = rest
+                # per-char sets pre_wrapped when a non-space char first
+                # exceeds the width (spaces never do, rs:790-805); with
+                # equal tags only the final state matters, and wordlen only
+                # grows, so the run's last non-space char decides
+                last = len(g.rstrip(" "))
+                if last and self.line.len + self.wslen + self.wordlen + last > width:
+                    self.pre_wrapped = True
+                self.wordlen += len(g)
+                self.word.push_text(g, wtag)
                 continue
             if c == "\n":
                 self.flush_word()

@@ -543,6 +543,26 @@ def test_resolve_url_abnormal_and_edge_cases():
     assert resolve_url(base, "  g  ") == "http://a/b/c/g"
 
 
+def test_resolve_url_and_link_list_agree():
+    """resolve_url and the per-page link resolver share one per-link rule:
+    malformed bracketed hosts give None on both, whatever the base."""
+    from rust_html2text_spark.engine.extract import _resolve_links, resolve_url
+
+    hrefs = [
+        "http://[::bad", "https://[::1]/x", "http://[zz]/", "http://x]/",
+        "https://ex.com/p[1]", "http://ok/a", " https://ok/b ",
+        "mailto:a@b", "javascript:void(0)", "../g", "/g", "?q", "", "g#s",
+        "HTTP://caps/", "//host/p",
+    ]
+    assert resolve_url(None, "http://[::bad") is None
+    assert resolve_url("http://a/b/c", "http://[::bad") is None
+    assert resolve_url(None, "https://[::1]/x") == "https://[::1]/x"
+    links = [(i, h, "", 0) for i, h in enumerate(hrefs)]
+    for base in (None, "", "http://a/b/c/d;p?q", "not a url", "http://[bad/"):
+        got = [t[4] for t in _resolve_links(links, base)]
+        assert got == [resolve_url(base, h) for h in hrefs], base
+
+
 def test_base_href_first_wins_and_relative_base():
     from rust_html2text_spark.engine.extract import extract_main_links
 

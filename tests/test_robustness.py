@@ -110,3 +110,44 @@ def test_tab_at_zero_width_terminates():
     assert isinstance(out, str)
     lines = html_to_lines(html, 30)  # rich decorator: per-char path
     assert len(lines) > 0
+
+
+def _long_line_page(kind: str, n: int) -> bytes:
+    """~n bytes of one unbroken line: a <pre> of ASCII or accented words,
+    or a <p> holding a single overlong token."""
+    if kind == "token":
+        return ("<p>" + "x" * n + "</p>").encode()
+    if kind == "ascii":
+        words = ["alpha", "beta", "gamma"]
+    else:
+        words = ["héllo", "wörld", "café"]
+    body = " ".join(words[i % 3] for i in range(n // 6))
+    return ("<pre>" + body + "</pre>").encode()
+
+
+@pytest.mark.parametrize("kind", ["ascii", "accented", "token"])
+@pytest.mark.parametrize("config_name", ["plain", "rich"])
+def test_long_line_cost_is_linear(kind, config_name):
+    """Per-row cost stays byte-linear on one very long line: 8x the bytes
+    must cost well under 24x the time (linear is ~8x).  A word buffer
+    grown with `str +=` on an attribute, or a hard wrap that re-slices
+    the remainder for every output line, is quadratic and lands at
+    30-40x here."""
+    import time
+
+    from rust_html2text_spark.engine.api import plain_config, rich_config
+
+    config = plain_config() if config_name == "plain" else rich_config()
+
+    def best_of_3(n: int) -> float:
+        html = _long_line_page(kind, n)
+        best = float("inf")
+        for _ in range(3):
+            t0 = time.perf_counter()
+            html_to_text(html, 80, config)
+            best = min(best, time.perf_counter() - t0)
+        return best
+
+    small = best_of_3(64 << 10)
+    large = best_of_3(512 << 10)
+    assert large / small < 24, (small, large)

@@ -668,12 +668,18 @@ def test_render_deduped_adaptive_paths_identical(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from rust_html2text_spark.operators.render import render_pages_deduped
-    from rust_html2text_spark.sources.corpus import load_pages
+    from rust_html2text_spark.sources.corpus import synthesize_page_py
 
-    # materialize to parquet so the operator's own plan is measured (a
-    # bare .limit() would plan its own GlobalLimit exchange)
+    # 40 payloads that are distinct by construction (each embeds its own
+    # id), so the distinct-corpus route does not hinge on the corpus head.
+    # Materialized to parquet so the operator's own plan is measured.
+    rows = [
+        synthesize_page_py(i, f"page {i} with its own text", f"src{i % 5}")
+        for i in range(40)
+    ]
+    assert len({html for _, html in rows}) == 40
     p = str(tmp_path / "pages")
-    load_pages(spark, SF_DIR).limit(40).write.parquet(p)
+    spark.createDataFrame(rows, "url string, html binary").write.parquet(p)
     pages = spark.read.parquet(p)
     dup = pages.unionByName(pages).unionByName(pages)  # every payload x3
 
