@@ -1,19 +1,17 @@
-"""The main-content extraction operator, Spark-first.
+"""The main-content extraction operators, Spark-first.
 
-Same plan shape as operators/render.py (scan → optional salted
-repartition → mapInPandas), same robustness contract (a hostile page becomes an error
-row, never a task failure) — the kernel is engine/extract.extract_main_ex
-(boilerplate strip + DOM-heuristic candidate scoring) instead of the
-whole-document render.  The winner tag and score ride along as lineage
-for crawl-QA dashboards.
+Same plan, partitioning, oversized-row lane and error-row contract as
+render_pages — all of it the shared seam's (operators/kernel.py).  The
+kernel is engine/extract.extract_main_ex (boilerplate strip +
+DOM-heuristic candidate scoring) instead of the whole-document render; the
+winner tag and score ride along as lineage for crawl-QA dashboards.  The
+link-graph, head-metadata and fused one-parse variants reuse the same
+seam with their own row functions.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -21,6 +19,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from rust_html2text_spark.operators.kernel import map_kernel
 
 EXTRACT_SCHEMA = StructType(
     [
@@ -37,150 +37,11 @@ EXTRACT_SCHEMA = StructType(
 
 # charset_sniff=True appends encoding lineage (the sniffed codec and how
 # it was determined: bom / meta / default)
-EXTRACT_SNIFF_SCHEMA = StructType(
-    EXTRACT_SCHEMA.fields
-    + [
-        StructField("encoding", StringType()),
-        StructField("encoding_source", StringType()),
-    ]
-)
-
-
-def _with_outlier_lane(
-    df: DataFrame,
-    pages: DataFrame,
-    fn,
-    schema,
-    num_partitions: int | None,
-    salt: int,
-    repartition: str,
-    outlier_bytes: int | None,
-) -> DataFrame:
-    """Shared plan tail for the extraction tier: optional oversized-page
-    routing (one giant page must never stall a task's worth of
-    siblings), optional salted url-hash repartition (default: none — the
-    scan-aligned splits feed the kernel directly), mapInPandas, union of the
-    two lanes.  The coalesce keeps NULL html in the normal lane (→ a
-    NullInput/absent row, never silently vanishing from both filter
-    branches)."""
-    if outlier_bytes is not None:
-        pages = pages.withColumn(
-            "_oversized",
-            F.coalesce(F.length("html") > outlier_bytes, F.lit(False)),
-        )
-        normal = pages.filter(~F.col("_oversized")).drop("_oversized")
-        oversized = pages.filter(F.col("_oversized")).drop("_oversized")
-    else:
-        normal = pages
-        oversized = None
-
-    n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    n = int(n)
-    key = F.xxhash64(F.col("url"), F.lit(salt))
-    if repartition == "salted":
-        normal = normal.repartition(n, key)
-    out = normal.mapInPandas(fn, schema)
-    if oversized is not None:
-        oversized = oversized.repartition(n, key)
-        out = out.unionByName(oversized.mapInPandas(fn, schema))
-    return out
-
-
-def _extract_batch_fn(
-    width: int,
-    config_kwargs: dict,
-    charset_sniff: bool = False,
-    charset_fallback: str = "utf-8",
-    charset_col: str | None = None,
-):
-    def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gc
-        import os
-        import sys
-
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
-
-        from rust_html2text_spark.engine.api import Config, plain_config
-        from rust_html2text_spark.engine.charset import decode_html
-        from rust_html2text_spark.engine.errors import RenderError
-        from rust_html2text_spark.engine.extract import extract_main_ex
-
-        gc.set_threshold(200_000, 50, 50)
-        config = Config(**config_kwargs) if config_kwargs else plain_config()
-
-        for batch in batches:
-            out = {
-                "url": batch["url"],
-                "text": [],
-                "error": [],
-                "html_bytes": [],
-                "text_bytes": [],
-                "winner_tag": [],
-                "score": [],
-                "n_candidates": [],
-            }
-            if charset_sniff:
-                out["encoding"] = []
-                out["encoding_source"] = []
-            labels = (
-                batch[charset_col]
-                if charset_col is not None and charset_col in batch
-                else [None] * len(batch)
-            )
-            for html, label in zip(batch["html"], labels):
-                if html is None:
-                    out["text"].append(None)
-                    out["error"].append("NullInput")
-                    out["html_bytes"].append(0)
-                    out["text_bytes"].append(0)
-                    out["winner_tag"].append(None)
-                    out["score"].append(None)
-                    out["n_candidates"].append(0)
-                    if charset_sniff:
-                        out["encoding"].append(None)
-                        out["encoding_source"].append(None)
-                    continue
-                if isinstance(html, str):
-                    html = html.encode("utf-8")
-                out["html_bytes"].append(len(html))
-                if charset_sniff:
-                    if label is not None and not isinstance(label, str):
-                        label = None  # NaN from pandas for NULL cells
-                    decoded, codec, src = decode_html(
-                        html, charset_fallback, transport_label=label
-                    )
-                    out["encoding"].append(codec)
-                    out["encoding_source"].append(src)
-                    html = decoded  # engine parse path accepts str as-is
-                try:
-                    r = extract_main_ex(html, width, config)
-                    out["text"].append(r["text"])
-                    out["error"].append(None)
-                    out["text_bytes"].append(len(r["text"].encode("utf-8")))
-                    out["winner_tag"].append(r["winner_tag"])
-                    out["score"].append(float(r["score"]))
-                    out["n_candidates"].append(r["n_candidates"])
-                except RenderError as e:
-                    out["text"].append(None)
-                    out["error"].append(type(e).__name__)
-                    out["text_bytes"].append(0)
-                    out["winner_tag"].append(None)
-                    out["score"].append(None)
-                    out["n_candidates"].append(0)
-                except Exception as e:  # never kill the task
-                    out["text"].append(None)
-                    out["error"].append(f"Fail:{type(e).__name__}")
-                    out["text_bytes"].append(0)
-                    out["winner_tag"].append(None)
-                    out["score"].append(None)
-                    out["n_candidates"].append(0)
-            yield pd.DataFrame(out)
-
-    return extract_batches
+_ENCODING_FIELDS = [
+    StructField("encoding", StringType()),
+    StructField("encoding_source", StringType()),
+]
+EXTRACT_SNIFF_SCHEMA = StructType(EXTRACT_SCHEMA.fields + _ENCODING_FIELDS)
 
 
 LINKS_SCHEMA = StructType(
@@ -210,63 +71,134 @@ META_SCHEMA = StructType(
     ]
 )
 
+_META_FIELDS = [f for f in META_SCHEMA.fields if f.name not in ("url", "error")]
+_META_KEYS = tuple(f.name for f in _META_FIELDS)
 
-def _links_batch_fn(
+
+def _extract_kernel(
+    width: int,
     config_kwargs: dict,
     charset_sniff: bool = False,
     charset_fallback: str = "utf-8",
 ):
-    def links_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gc
+    """extract_main_ex row, fed the optional per-row transport label."""
 
-        # same rationale as the render kernel: the engine allocates
-        # heavily but produces (essentially) no cyclic garbage in the
-        # hot loop; raising the gen-0 threshold buys ~10% in the worker
-        gc.set_threshold(200_000, 50, 50)
-        import os
-        import sys
+    def make_row():
+        from rust_html2text_spark.engine.api import Config, plain_config
+        from rust_html2text_spark.engine.charset import decode_html
+        from rust_html2text_spark.engine.extract import extract_main_ex
 
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
+        config = Config(**config_kwargs) if config_kwargs else plain_config()
 
+        def row(rec, html, label=None):
+            if charset_sniff:
+                # the engine parse path accepts the decoded str as-is
+                html, rec["encoding"], rec["encoding_source"] = decode_html(
+                    html, charset_fallback, transport_label=label
+                )
+            r = extract_main_ex(html, width, config)
+            rec["text"] = r["text"]
+            rec["text_bytes"] = len(r["text"].encode("utf-8"))
+            rec["winner_tag"] = r["winner_tag"]
+            rec["score"] = float(r["score"])
+            rec["n_candidates"] = r["n_candidates"]
+
+        return row
+
+    return make_row
+
+
+def _links_kernel(config_kwargs: dict, charset_sniff: bool, charset_fallback: str):
+    """Edge row: the page's main-content links, resolved against its url."""
+
+    def make_row():
         from rust_html2text_spark.engine.api import Config, plain_config
         from rust_html2text_spark.engine.charset import decode_html
         from rust_html2text_spark.engine.extract import extract_main_links
 
         config = Config(**config_kwargs) if config_kwargs else plain_config()
-        for batch in batches:
-            out = {
-                "url": [],
-                "ordinal": [],
-                "href": [],
-                "anchor": [],
-                "nofollow": [],
-                "target_abs": [],
-            }
-            for url, html in zip(batch["url"], batch["html"]):
-                if html is None:
-                    continue
-                if isinstance(html, str):
-                    html = html.encode("utf-8")
-                if charset_sniff:
-                    html = decode_html(html, charset_fallback)[0]
+
+        def row(html, url):
+            if charset_sniff:
+                html = decode_html(html, charset_fallback)[0]
+            return extract_main_links(html, config, base_url=url)
+
+        return row
+
+    return make_row
+
+
+def _meta_kernel(xml_mode, charset_sniff: bool, charset_fallback: str):
+    def make_row():
+        from rust_html2text_spark.engine.charset import decode_html
+        from rust_html2text_spark.engine.metadata import page_metadata
+
+        def row(rec, html):
+            if charset_sniff:
+                html = decode_html(html, charset_fallback)[0]
+            m = page_metadata(html, xml_mode=xml_mode)
+            for k in _META_KEYS:
+                rec[k] = m[k]
+
+        return row
+
+    return make_row
+
+
+def _full_kernel(
+    width: int, config_kwargs: dict, charset_sniff: bool, charset_fallback: str
+):
+    """extract_main_full row, fed the page url as the link base."""
+
+    def make_row():
+        import json
+
+        from rust_html2text_spark.engine.api import Config, plain_config
+        from rust_html2text_spark.engine.charset import decode_html
+        from rust_html2text_spark.engine.errors import RenderError
+        from rust_html2text_spark.engine.extract import (
+            extract_main_full,
+            extract_main_links,
+        )
+        from rust_html2text_spark.engine.metadata import page_metadata
+
+        config = Config(**config_kwargs) if config_kwargs else plain_config()
+
+        def put_links_meta(rec, links, meta):
+            rec["links_json"] = json.dumps(links, separators=(",", ":"))
+            for k in _META_KEYS:
+                rec[k] = meta.get(k)
+
+        def row(rec, html, url):
+            if charset_sniff:
+                html, rec["encoding"], rec["encoding_source"] = decode_html(
+                    html, charset_fallback
+                )
+            try:
+                r = extract_main_full(html, width, config, base_url=url)
+            except RenderError as e:
+                # links + metadata do not depend on rendering: recover
+                # them so an unrenderable page still feeds the link
+                # graph and metadata tables (matches the goldens,
+                # which compute the three independently)
+                rec["error"] = type(e).__name__
                 try:
                     links = extract_main_links(html, config, base_url=url)
+                    meta = page_metadata(html, xml_mode=config.xml)
                 except Exception:
-                    continue  # unparseable page contributes no edges
-                for o, href, anchor, nofollow, target_abs in links:
-                    out["url"].append(url)
-                    out["ordinal"].append(o)
-                    out["href"].append(href)
-                    out["anchor"].append(anchor)
-                    out["nofollow"].append(nofollow)
-                    out["target_abs"].append(target_abs)
-            yield pd.DataFrame(out)
+                    return
+                put_links_meta(rec, links, meta)
+                return
+            rec["text"] = r["text"]
+            rec["text_bytes"] = len(r["text"].encode("utf-8"))
+            rec["winner_tag"] = r["winner_tag"]
+            rec["score"] = float(r["score"])
+            rec["n_candidates"] = r["n_candidates"]
+            put_links_meta(rec, r["links"], r["meta"])
 
-    return links_batches
+        return row
+
+    return make_row
 
 
 def extract_links(
@@ -283,80 +215,20 @@ def extract_links(
     — chrome/nav/footer links are dropped by the same strip+score pass as
     extract_pages, so the edge list is content-to-content (what a link-
     graph quality signal like a PageRank-ish prior wants; boilerplate
-    edges are exactly the noise).  Variable rows per input page; same
-    url-hash partitioning and the oversized-outlier lane match the rest
-    of the tier."""
-    if repartition not in ("salted", "none"):
-        raise ValueError(f"repartition must be 'salted' or 'none', got {repartition!r}")
-    return _with_outlier_lane(
+    edges are exactly the noise).  Variable rows per input page; a NULL or
+    unparseable page contributes no edges.  Partitioning and the
+    oversized-row lane are the seam's (operators/kernel.py)."""
+    return map_kernel(
         df,
-        df.select("url", "html"),
-        _links_batch_fn(config_kwargs or {}, charset_sniff, charset_fallback),
+        _links_kernel(config_kwargs or {}, charset_sniff, charset_fallback),
         LINKS_SCHEMA,
-        num_partitions,
-        salt,
-        repartition,
-        outlier_bytes,
+        args=("url",),
+        edges=True,
+        num_partitions=num_partitions,
+        salt=salt,
+        repartition=repartition,
+        outlier_bytes=outlier_bytes,
     )
-
-
-def _meta_batch_fn(xml_mode, charset_sniff: bool = False, charset_fallback: str = "utf-8"):
-    def meta_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gc
-
-        # same rationale as the render kernel: the engine allocates
-        # heavily but produces (essentially) no cyclic garbage in the
-        # hot loop; raising the gen-0 threshold buys ~10% in the worker
-        gc.set_threshold(200_000, 50, 50)
-        import os
-        import sys
-
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
-
-        from rust_html2text_spark.engine.charset import decode_html
-        from rust_html2text_spark.engine.metadata import page_metadata
-
-        for batch in batches:
-            out = {
-                "url": batch["url"],
-                "title": [],
-                "description": [],
-                "lang_attr": [],
-                "canonical": [],
-                "og_title": [],
-                "robots": [],
-                "error": [],
-            }
-            for html in batch["html"]:
-                if html is None:
-                    for k in _META_KEYS:
-                        out[k].append(None)
-                    out["error"].append("NullInput")
-                    continue
-                if isinstance(html, str):
-                    html = html.encode("utf-8")
-                if charset_sniff:
-                    html = decode_html(html, charset_fallback)[0]
-                try:
-                    m = page_metadata(html, xml_mode=xml_mode)
-                    out["title"].append(m["title"])
-                    out["description"].append(m["description"])
-                    out["lang_attr"].append(m["lang_attr"])
-                    out["canonical"].append(m["canonical"])
-                    out["og_title"].append(m["og_title"])
-                    out["robots"].append(m["robots"])
-                    out["error"].append(None)
-                except Exception as e:  # never kill the task
-                    for k in _META_KEYS:
-                        out[k].append(None)
-                    out["error"].append(f"Fail:{type(e).__name__}")
-            yield pd.DataFrame(out)
-
-    return meta_batches
 
 
 def page_metadata_pages(
@@ -372,146 +244,23 @@ def page_metadata_pages(
     """Head-metadata extraction: (url, title, description, lang_attr,
     canonical, og_title, error).  The canonical url is the dedup key a
     crawl pipeline trusts over the fetched url; lang_attr is the page's
-    language *claim* to audit lang_id's measurement against."""
-    if repartition not in ("salted", "none"):
-        raise ValueError(f"repartition must be 'salted' or 'none', got {repartition!r}")
-    return _with_outlier_lane(
+    language *claim* to audit lang_id's measurement against.  Plan and
+    error rows: operators/kernel.py."""
+    return map_kernel(
         df,
-        df.select("url", "html"),
-        _meta_batch_fn(xml_mode, charset_sniff, charset_fallback),
+        _meta_kernel(xml_mode, charset_sniff, charset_fallback),
         META_SCHEMA,
-        num_partitions,
-        salt,
-        repartition,
-        outlier_bytes,
+        num_partitions=num_partitions,
+        salt=salt,
+        repartition=repartition,
+        outlier_bytes=outlier_bytes,
     )
 
 
 FULL_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("text", StringType()),
-        StructField("error", StringType()),
-        StructField("html_bytes", LongType()),
-        StructField("text_bytes", LongType()),
-        StructField("winner_tag", StringType()),
-        StructField("score", DoubleType()),
-        StructField("n_candidates", LongType()),
-        StructField("links_json", StringType()),
-        StructField("title", StringType()),
-        StructField("description", StringType()),
-        StructField("lang_attr", StringType()),
-        StructField("canonical", StringType()),
-        StructField("og_title", StringType()),
-        StructField("robots", StringType()),
-    ]
+    EXTRACT_SCHEMA.fields + [StructField("links_json", StringType())] + _META_FIELDS
 )
-
-FULL_SNIFF_SCHEMA = StructType(
-    FULL_SCHEMA.fields
-    + [
-        StructField("encoding", StringType()),
-        StructField("encoding_source", StringType()),
-    ]
-)
-
-_META_KEYS = ("title", "description", "lang_attr", "canonical", "og_title", "robots")
-
-
-def _full_batch_fn(
-    width: int,
-    config_kwargs: dict,
-    charset_sniff: bool = False,
-    charset_fallback: str = "utf-8",
-):
-    def full_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gc
-
-        # same rationale as the render kernel: the engine allocates
-        # heavily but produces (essentially) no cyclic garbage in the
-        # hot loop; raising the gen-0 threshold buys ~10% in the worker
-        gc.set_threshold(200_000, 50, 50)
-        import json
-        import os
-        import sys
-
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
-
-        from rust_html2text_spark.engine.api import Config, plain_config
-        from rust_html2text_spark.engine.charset import decode_html
-        from rust_html2text_spark.engine.errors import RenderError
-        from rust_html2text_spark.engine.extract import (
-            extract_main_full,
-            extract_main_links,
-        )
-        from rust_html2text_spark.engine.metadata import page_metadata
-
-        config = Config(**config_kwargs) if config_kwargs else plain_config()
-        schema = FULL_SNIFF_SCHEMA if charset_sniff else FULL_SCHEMA
-        cols = [f.name for f in schema.fields if f.name != "url"]
-        for batch in batches:
-            out: dict = {"url": batch["url"]}
-            for c in cols:
-                out[c] = []
-
-            def emit(text, error, n_in, info=None, links=None, meta=None):
-                out["text"].append(text)
-                out["error"].append(error)
-                out["html_bytes"].append(n_in)
-                out["text_bytes"].append(
-                    len(text.encode("utf-8")) if text is not None else 0
-                )
-                out["winner_tag"].append(info["winner_tag"] if info else None)
-                out["score"].append(float(info["score"]) if info else None)
-                out["n_candidates"].append(info["n_candidates"] if info else 0)
-                out["links_json"].append(
-                    json.dumps(links, separators=(",", ":"))
-                    if links is not None
-                    else None
-                )
-                for k in _META_KEYS:
-                    out[k].append(meta.get(k) if meta else None)
-
-            for url, html in zip(batch["url"], batch["html"]):
-                if html is None:
-                    emit(None, "NullInput", 0)
-                    if charset_sniff:
-                        out["encoding"].append(None)
-                        out["encoding_source"].append(None)
-                    continue
-                if isinstance(html, str):
-                    html = html.encode("utf-8")
-                if charset_sniff:
-                    decoded, codec, src = decode_html(html, charset_fallback)
-                    out["encoding"].append(codec)
-                    out["encoding_source"].append(src)
-                    n_raw = len(html)
-                    html = decoded
-                else:
-                    n_raw = len(html)
-                try:
-                    r = extract_main_full(html, width, config, base_url=url)
-                    emit(r["text"], None, n_raw, r, r["links"], r["meta"])
-                except RenderError as e:
-                    # links + metadata do not depend on rendering: recover
-                    # them so an unrenderable page still feeds the link
-                    # graph and metadata tables (matches the goldens,
-                    # which compute the three independently)
-                    try:
-                        links = extract_main_links(html, config, base_url=url)
-                        meta = page_metadata(html, xml_mode=config.xml)
-                    except Exception:
-                        links, meta = None, None
-                    emit(None, type(e).__name__, n_raw, None, links, meta)
-                except Exception as e:
-                    emit(None, f"Fail:{type(e).__name__}", n_raw)
-            yield pd.DataFrame(out)
-
-    return full_batches
+FULL_SNIFF_SCHEMA = StructType(FULL_SCHEMA.fields + _ENCODING_FIELDS)
 
 
 def extract_pages_full(
@@ -529,22 +278,21 @@ def extract_pages_full(
     (url, text, error, sizes, scoring lineage, links_json, head
     metadata).  A curation pipeline that consumes all three must not
     parse every page three times — at crawl scale the parse is ~25% of
-    the kernel, so the fusion saves ~½ of a full extra pass.  Plan shape
-    matches the tier: pruned scan → (optional salted repartition) → one mapInPandas
-    with the oversized-outlier lane.  charset_sniff=True adds the WHATWG
-    sniff + (encoding, encoding_source) lineage, same contract as
-    extract_pages."""
-    if repartition not in ("salted", "none"):
-        raise ValueError(f"repartition must be 'salted' or 'none', got {repartition!r}")
-    return _with_outlier_lane(
+    the kernel, so the fusion saves ~½ of a full extra pass.  A page that
+    fails to render (`TooNarrow`, ...) still carries its links and
+    metadata.  charset_sniff=True adds the WHATWG sniff +
+    (encoding, encoding_source) lineage, same contract as extract_pages.
+    Plan and error rows: operators/kernel.py."""
+    return map_kernel(
         df,
-        df.select("url", "html"),
-        _full_batch_fn(width, config_kwargs or {}, charset_sniff, charset_fallback),
+        _full_kernel(width, config_kwargs or {}, charset_sniff, charset_fallback),
         FULL_SNIFF_SCHEMA if charset_sniff else FULL_SCHEMA,
-        num_partitions,
-        salt,
-        repartition,
-        outlier_bytes,
+        args=("url",),
+        size_col="html_bytes",
+        num_partitions=num_partitions,
+        salt=salt,
+        repartition=repartition,
+        outlier_bytes=outlier_bytes,
     )
 
 
@@ -562,12 +310,8 @@ def extract_pages(
 ) -> DataFrame:
     """Extract main content from a pages DataFrame (url, html, ...) →
     (url, text, error, sizes, winner_tag, score, n_candidates).  Same
-    partitioning contract as operators/render.render_pages: no pre-kernel
-    shuffle by default (`repartition="salted"` opts into the url-hash
-    shuffle for cost-correlated file layouts), and an
-    oversized-outlier lane so one giant page never stalls a task's worth
-    of siblings (the lane's second-scan cost and when to disable it are
-    quantified in render_pages' docstring).
+    partitioning contract and oversized-row lane as render_pages
+    (operators/kernel.py).
 
     charset_sniff=True runs the WHATWG encoding sniff (BOM → transport
     label → meta prescan → charset_fallback) in front of the parse and
@@ -578,20 +322,18 @@ def extract_pages(
     `http_charset` from the record's Content-Type header).  Off by
     default: the render path's utf-8/replace is byte-identical
     reference parity and stays that way."""
-    if repartition not in ("salted", "none"):
-        raise ValueError(f"repartition must be 'salted' or 'none', got {repartition!r}")
-    cols = ["url", "html"]
-    if charset_col is not None:
-        if charset_col not in df.columns:
-            raise ValueError(
-                f"charset_col {charset_col!r} not in input columns {df.columns}"
-            )
-        cols.append(charset_col)
-    pages = df.select(*cols)
-    fn = _extract_batch_fn(
-        width, config_kwargs or {}, charset_sniff, charset_fallback, charset_col
-    )
-    schema = EXTRACT_SNIFF_SCHEMA if charset_sniff else EXTRACT_SCHEMA
-    return _with_outlier_lane(
-        df, pages, fn, schema, num_partitions, salt, repartition, outlier_bytes
+    if charset_col is not None and charset_col not in df.columns:
+        raise ValueError(
+            f"charset_col {charset_col!r} not in input columns {df.columns}"
+        )
+    return map_kernel(
+        df,
+        _extract_kernel(width, config_kwargs or {}, charset_sniff, charset_fallback),
+        EXTRACT_SNIFF_SCHEMA if charset_sniff else EXTRACT_SCHEMA,
+        args=(charset_col,) if charset_col is not None else (),
+        size_col="html_bytes",
+        num_partitions=num_partitions,
+        salt=salt,
+        repartition=repartition,
+        outlier_bytes=outlier_bytes,
     )

@@ -1,26 +1,29 @@
-"""PDF text-extraction operator, Spark-first.
+"""PDF text-extraction operators, Spark-first.
 
 Third member of the extraction-tier operator family (render_pages,
-extract_pages): same plan shape — pruned scan → optional salted url-hash
-repartition → Arrow-batched mapInPandas — and the same robustness
-contract (a hostile or truncated PDF becomes an error row, never a task
-failure).  The kernel is engine/pdftext.extract_pdf_ex (document
-structure + content-stream interpretation + layout assembly); page count
-and PDF version ride along as lineage.
+extract_pages): the same seam (operators/kernel.py) — pruned scan →
+optional salted url-hash repartition → Arrow-batched mapInPandas — and
+the same robustness contract (a hostile or truncated PDF becomes an error
+row, never a task failure; a structurally unusable one reads
+`PdfError:<msg>`, cut to 200 chars).  The kernel is
+engine/pdftext.extract_pdf_ex (document structure + content-stream
+interpretation + layout assembly); page count and PDF version ride along
+as lineage.  These row functions are the only operator code that imports
+the PDF engine.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from rust_html2text_spark.operators.kernel import map_kernel
+from rust_html2text_spark.operators.render import _render_kernel
 
 PDF_SCHEMA = StructType(
     [
@@ -37,65 +40,38 @@ PDF_SCHEMA = StructType(
 )
 
 
-def _pdf_batch_fn(page_sep: str):
-    def pdf_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gc
-
-        # same rationale as the render kernel: the engine allocates
-        # heavily but produces (essentially) no cyclic garbage in the
-        # hot loop; raising the gen-0 threshold buys ~10% in the worker
-        gc.set_threshold(200_000, 50, 50)
-        import os
-        import sys
-
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
-
+def _pdf_kernel(page_sep: str):
+    def make_row():
         from rust_html2text_spark.engine.pdftext import PdfError, extract_pdf_ex
 
-        for batch in batches:
-            out = {
-                "url": batch["url"],
-                "text": [],
-                "error": [],
-                "pdf_bytes": [],
-                "text_bytes": [],
-                "n_pages": [],
-                "pdf_version": [],
-                "title": [],
-                "author": [],
-            }
+        def row(rec, pdf):
+            try:
+                r = extract_pdf_ex(pdf, page_sep)
+            except PdfError as e:
+                rec["error"] = f"PdfError:{e}"[:200]
+                return
+            rec["text"] = r["text"]
+            rec["text_bytes"] = len(r["text"].encode("utf-8"))
+            for k in ("n_pages", "pdf_version", "title", "author"):
+                rec[k] = r[k]
 
-            def emit(text, error, n_in, r=None):
-                out["text"].append(text)
-                out["error"].append(error)
-                out["pdf_bytes"].append(n_in)
-                out["text_bytes"].append(
-                    len(text.encode("utf-8")) if text is not None else 0
-                )
-                out["n_pages"].append(r["n_pages"] if r else 0)
-                out["pdf_version"].append(r["pdf_version"] if r else None)
-                out["title"].append(r["title"] if r else None)
-                out["author"].append(r["author"] if r else None)
+        return row
 
-            for pdf in batch["pdf"]:
-                if pdf is None:
-                    emit(None, "NullInput", 0)
-                    continue
-                pdf = bytes(pdf)
-                try:
-                    r = extract_pdf_ex(pdf, page_sep)
-                    emit(r["text"], None, len(pdf), r)
-                except PdfError as e:
-                    emit(None, f"PdfError:{e}"[:200], len(pdf))
-                except Exception as e:  # never kill the task
-                    emit(None, f"Fail:{type(e).__name__}", len(pdf))
-            yield pd.DataFrame(out)
+    return make_row
 
-    return pdf_batches
+
+def _pdf_links_kernel():
+    def make_row():
+        from rust_html2text_spark.engine.pdfparse import parse_pdf
+        from rust_html2text_spark.engine.pdftext import pdf_links_from_doc
+
+        def row(pdf):
+            doc = parse_pdf(pdf)
+            return pdf_links_from_doc(doc, doc.pages())
+
+        return row
+
+    return make_row
 
 
 LINKS_SCHEMA = StructType(
@@ -108,48 +84,6 @@ LINKS_SCHEMA = StructType(
 )
 
 
-def _pdf_links_batch_fn():
-    def links_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gc
-
-        # same rationale as the render kernel: the engine allocates
-        # heavily but produces (essentially) no cyclic garbage in the
-        # hot loop; raising the gen-0 threshold buys ~10% in the worker
-        gc.set_threshold(200_000, 50, 50)
-        import os
-        import sys
-
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
-
-        from rust_html2text_spark.engine.pdfparse import parse_pdf
-        from rust_html2text_spark.engine.pdftext import PdfError, pdf_links_from_doc
-
-        for batch in batches:
-            out = {"url": [], "page": [], "ordinal": [], "uri": []}
-            for url, pdf in zip(batch["url"], batch["pdf"]):
-                if pdf is None:
-                    continue
-                try:
-                    doc = parse_pdf(bytes(pdf))
-                    links = pdf_links_from_doc(doc, doc.pages())
-                except PdfError:
-                    continue  # unusable pdf contributes no edges
-                except Exception:
-                    continue
-                for page_idx, ordinal, uri in links:
-                    out["url"].append(url)
-                    out["page"].append(page_idx)
-                    out["ordinal"].append(ordinal)
-                    out["uri"].append(uri)
-            yield pd.DataFrame(out)
-
-    return links_batches
-
-
 def extract_pdf_links(
     df: DataFrame,
     num_partitions: int | None = None,
@@ -159,23 +93,18 @@ def extract_pdf_links(
     """The PDF half of the crawl link graph: (url, page, ordinal, uri)
     from /Annots Link → /A /URI actions — PDFs carry their outbound
     edges as annotations, not text.  Pairs with
-    operators/extract.extract_links for HTML pages."""
-    if repartition not in ("salted", "none"):
-        raise ValueError(f"repartition must be 'salted' or 'none', got {repartition!r}")
-    pages = df.select("url", "pdf")
-    if repartition == "salted":
-        n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        pages = pages.repartition(int(n), F.xxhash64(F.col("url"), F.lit(salt)))
-    return pages.mapInPandas(_pdf_links_batch_fn(), LINKS_SCHEMA)
-
-
-def is_pdf_payload(col):
-    """Codegen-only PDF sniff on a binary payload column: the %PDF- magic
-    within the first 1024 bytes (the same window engine/pdfparse.parse_pdf
-    accepts — crawled PDFs sometimes carry server preambles).  NULL-safe
-    (NULL payload → false → routed to the HTML lane's NullInput row)."""
-    prefix = F.decode(F.substring(col, 1, 1024), "ISO-8859-1")
-    return F.coalesce(F.instr(prefix, "%PDF-") > 0, F.lit(False))
+    operators/extract.extract_links for HTML pages.  Single-scan (no
+    oversized-row lane); a NULL or unusable PDF contributes no edges."""
+    return map_kernel(
+        df,
+        _pdf_links_kernel(),
+        LINKS_SCHEMA,
+        payload_col="pdf",
+        edges=True,
+        num_partitions=num_partitions,
+        salt=salt,
+        repartition=repartition,
+    )
 
 
 MIXED_SCHEMA = StructType(
@@ -190,93 +119,38 @@ MIXED_SCHEMA = StructType(
 )
 
 
-def _mixed_batch_fn(
+def _mixed_kernel(
     width: int,
     config_kwargs: dict,
     page_sep: str,
-    charset_sniff: bool = False,
-    charset_fallback: str = "utf-8",
+    charset_sniff: bool,
+    charset_fallback: str,
 ):
-    def mixed_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gc
+    """Per-row dispatch between the PDF row and the render row."""
+    make_pdf_row = _pdf_kernel(page_sep)
+    make_html_row = _render_kernel(width, config_kwargs)
 
-        # same rationale as the render kernel: the engine allocates
-        # heavily but produces (essentially) no cyclic garbage in the
-        # hot loop; raising the gen-0 threshold buys ~10% in the worker
-        gc.set_threshold(200_000, 50, 50)
-        import os
-        import sys
-
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
-
-        from rust_html2text_spark.engine.api import (
-            Config,
-            html_to_text,
-            plain_config,
-        )
+    def make_row():
         from rust_html2text_spark.engine.charset import decode_html
-        from rust_html2text_spark.engine.errors import RenderError
-        from rust_html2text_spark.engine.pdftext import PdfError, extract_pdf_ex
 
-        config = Config(**config_kwargs) if config_kwargs else plain_config()
-        for batch in batches:
-            out = {
-                "url": batch["url"],
-                "kind": [],
-                "text": [],
-                "error": [],
-                "input_bytes": [],
-                "text_bytes": [],
-            }
+        pdf_row, html_row = make_pdf_row(), make_html_row()
 
-            def emit(kind, text, error, n_in):
-                out["kind"].append(kind)
-                out["text"].append(text)
-                out["error"].append(error)
-                out["input_bytes"].append(n_in)
-                out["text_bytes"].append(
-                    len(text.encode("utf-8")) if text is not None else 0
-                )
+        def row(rec, payload):
+            # the same 1 KiB magic window parse_pdf accepts; crawl
+            # content-type headers lie, so they are never consulted
+            if b"%PDF-" in payload[:1024]:
+                rec["kind"] = "pdf"
+                pdf_row(rec, payload)
+                return
+            # the sniff applies to the HTML lane only — PDF bytes are
+            # binary and the magic check above already ran
+            if charset_sniff:
+                payload = decode_html(payload, charset_fallback)[0]
+            html_row(rec, payload)
 
-            for payload in batch["html"]:
-                if payload is None:
-                    emit("html", None, "NullInput", 0)
-                    continue
-                if isinstance(payload, str):
-                    payload = payload.encode("utf-8")
-                payload = bytes(payload)
-                # the same 1 KiB magic window parse_pdf accepts; crawl
-                # content-type headers lie, so they are never consulted
-                if b"%PDF-" in payload[:1024]:
-                    try:
-                        r = extract_pdf_ex(payload, page_sep)
-                        emit("pdf", r["text"], None, len(payload))
-                    except PdfError as e:
-                        emit("pdf", None, f"PdfError:{e}"[:200], len(payload))
-                    except Exception as e:
-                        emit("pdf", None, f"Fail:{type(e).__name__}", len(payload))
-                    continue
-                try:
-                    # the sniff applies to the HTML lane only — PDF bytes
-                    # are binary and the magic check above already ran
-                    doc = (
-                        decode_html(payload, charset_fallback)[0]
-                        if charset_sniff
-                        else payload
-                    )
-                    text = html_to_text(doc, width, config)
-                    emit("html", text, None, len(payload))
-                except RenderError as e:
-                    emit("html", None, type(e).__name__, len(payload))
-                except Exception as e:
-                    emit("html", None, f"Fail:{type(e).__name__}", len(payload))
-            yield pd.DataFrame(out)
+        return row
 
-    return mixed_batches
+    return make_row
 
 
 def extract_mixed_pages(
@@ -299,23 +173,22 @@ def extract_mixed_pages(
     pdftext kernel, everything else through the full HTML render.
     Output: (url, kind, text, error, input_bytes, text_bytes).
 
-    Scale shape: ONE pruned scan → (optional salted shuffle) → ONE mapInPandas
-    whose Python side dispatches per row — both kernels live in the same
-    worker process, so routing costs a 1 KiB memchr, not a second scan
-    of the payload column (a two-filtered-branches plan reads the
-    100 TB table twice because the sniff predicate cannot push to
-    parquet)."""
-    if repartition not in ("salted", "none"):
-        raise ValueError(f"repartition must be 'salted' or 'none', got {repartition!r}")
-    pages = df.select("url", F.col(payload_col).alias("html"))
-    if repartition == "salted":
-        n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        pages = pages.repartition(int(n), F.xxhash64(F.col("url"), F.lit(salt)))
-    return pages.mapInPandas(
-        _mixed_batch_fn(
+    Single-scan by construction (no oversized-row lane; the reason is in
+    operators/kernel.py): ONE pruned scan → (optional salted shuffle) →
+    ONE mapInPandas whose row function dispatches per row.  A NULL payload
+    reads kind 'html'."""
+    return map_kernel(
+        df,
+        _mixed_kernel(
             width, config_kwargs or {}, page_sep, charset_sniff, charset_fallback
         ),
         MIXED_SCHEMA,
+        payload_col=payload_col,
+        size_col="input_bytes",
+        defaults={"kind": "html"},
+        num_partitions=num_partitions,
+        salt=salt,
+        repartition=repartition,
     )
 
 
@@ -329,34 +202,17 @@ def extract_pdf_pages(
 ) -> DataFrame:
     """Extract text from a PDF pages DataFrame (url, pdf, ...) →
     (url, text, error, pdf_bytes, text_bytes, n_pages, pdf_version).
-    Partitioning contract matches render_pages: no pre-kernel shuffle
-    by default (`repartition="salted"` opts into the url-hash shuffle
-    for cost-correlated file layouts), and an
-    oversized-outlier lane (default 8 MiB — PDFs run larger than HTML)
-    so one giant scan never stalls a task's worth of siblings."""
-    if repartition not in ("salted", "none"):
-        raise ValueError(f"repartition must be 'salted' or 'none', got {repartition!r}")
-    pages = df.select("url", "pdf")
-    if outlier_bytes is not None:
-        pages = pages.withColumn(
-            "_oversized",
-            F.coalesce(F.length("pdf") > outlier_bytes, F.lit(False)),
-        )
-        normal = pages.filter(~F.col("_oversized")).drop("_oversized")
-        oversized = pages.filter(F.col("_oversized")).drop("_oversized")
-    else:
-        normal = pages
-        oversized = None
-
-    n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    n = int(n)
-    key = F.xxhash64(F.col("url"), F.lit(salt))
-    if repartition == "salted":
-        normal = normal.repartition(n, key)
-
-    fn = _pdf_batch_fn(page_sep)
-    out = normal.mapInPandas(fn, PDF_SCHEMA)
-    if oversized is not None:
-        oversized = oversized.repartition(n, key)
-        out = out.unionByName(oversized.mapInPandas(fn, PDF_SCHEMA))
-    return out
+    Partitioning contract and oversized-row lane match render_pages
+    (operators/kernel.py); the lane's default threshold is 8 MiB because
+    PDFs run larger than HTML."""
+    return map_kernel(
+        df,
+        _pdf_kernel(page_sep),
+        PDF_SCHEMA,
+        payload_col="pdf",
+        size_col="pdf_bytes",
+        num_partitions=num_partitions,
+        salt=salt,
+        repartition=repartition,
+        outlier_bytes=outlier_bytes,
+    )

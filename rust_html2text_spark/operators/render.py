@@ -1,34 +1,17 @@
 """The HTML→text extraction operator, Spark-first.
 
 The reference engine is a document-at-a-time scalar transform
-(`text = render(html, width, options)`, /root/reference/src/lib.rs:3430),
+(`text = render(html, width, options)`, the reference's src/lib.rs:3430),
 so the Catalyst-visible plan is deliberately trivial — scan → (optional
 salted repartition) → mapInPandas → write — and every reference semantic
-lives inside the Arrow-batched Python function.
-
-Scale design (10^12 docs / 1000 executors):
-- **Partitioning**: the default is NO pre-kernel shuffle (scan-aligned
-  splits — r07, guide §2.4: the corpus' html bytes never cross the
-  network before the kernel); `repartition="salted"`
-  (`repartition(n, xxhash64(url, salt))`) remains available to
-  decorrelate giant hosts from partition boundaries when the input file
-  layout concentrates expensive pages.
-- **Outlier routing**: rows with `length(html) > outlier_bytes` are routed
-  to a dedicated repartition sized so each oversized doc lands alone,
-  keeping p99 task time bounded (one 1 GB page cannot stall a 128 MB-sized
-  task's worth of siblings).
-- **Robustness**: per-row try/except inside the batch — a parse failure or
-  TooNarrow becomes an `error` column value, never a task failure
-  (reference Error enum, lib.rs:384-400).
-- **Metrics/lineage**: per-partition row/byte counts emitted as a second
-  DataFrame for an append-only metrics table.
+lives inside the render row function.  The plan, the never-crash row loop
+and the oversized-row lane are the shared seam's (operators/kernel.py);
+this module adds the render kernel, the dedup-aware variant and the
+per-partition metrics DataFrame for an append-only metrics table.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     LongType,
@@ -36,6 +19,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from rust_html2text_spark.operators.kernel import map_kernel
 
 RENDER_SCHEMA = StructType(
     [
@@ -48,17 +33,16 @@ RENDER_SCHEMA = StructType(
 )
 
 
-def _render_batch_fn(
+def _render_kernel(
     width: int,
     config_kwargs: dict,
     coloured: bool = False,
     use_css_colours: bool = True,
     no_default_colours: bool = False,
     syntax_highlight: bool = False,
-    passthrough_cols: tuple = (),
 ):
-    """Build the mapInPandas function; engine imports happen on the executor
-    so only rust_html2text_spark needs to ship via --py-files.
+    """The render row function (operators/kernel.map_kernel protocol),
+    fed the optional per-row `width` (NULL → the job width).
 
     `coloured` renders through the ANSI colour map (reference CLI
     `--colour`, main.rs:161-180); `syntax_highlight` registers the default
@@ -66,31 +50,10 @@ def _render_batch_fn(
     booleans rather than callables so the closure stays trivially
     picklable — the actual functions are imported executor-side."""
 
-    def render_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gc
-        import os
-        import sys
-
-        # Python workers inherit PYTHONPATH, not the driver's sys.path —
-        # make the package importable regardless of worker cwd.
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
-
+    def make_row():
         from rust_html2text_spark.engine.api import Config, html_to_text, plain_config
-        from rust_html2text_spark.engine.errors import RenderError
 
-        # The engine allocates heavily but (with the DOM back-pointers
-        # broken) produces no cyclic garbage; raising the gen-0 threshold
-        # buys ~10% throughput in the worker.
-        gc.set_threshold(200_000, 50, 50)
-
-        if config_kwargs:
-            config = Config(**config_kwargs)
-        else:
-            config = plain_config()
+        config = Config(**config_kwargs) if config_kwargs else plain_config()
         if syntax_highlight:
             from rust_html2text_spark.engine.highlight import DEFAULT_HIGHLIGHTERS
 
@@ -107,59 +70,22 @@ def _render_batch_fn(
                 no_default_colours=no_default_colours,
             )
 
-            def render_one(h, w):
+            def render(h, w):
                 return html_to_coloured(h, w, cmap, config)
 
         else:
 
-            def render_one(h, w):
+            def render(h, w):
                 return html_to_text(h, w, config)
 
-        for batch in batches:
-            urls = batch["url"]
-            htmls = batch["html"]
-            # optional per-row width column (falls back to the job width)
-            widths = batch["width"] if "width" in batch.columns else None
-            texts: list[str | None] = []
-            errors: list[str | None] = []
-            html_bytes: list[int] = []
-            text_bytes: list[int] = []
-            for rowno, html in enumerate(htmls):
-                row_width = int(widths.iloc[rowno]) if widths is not None else width
-                if html is None:
-                    texts.append(None)
-                    errors.append("NullInput")
-                    html_bytes.append(0)
-                    text_bytes.append(0)
-                    continue
-                if isinstance(html, str):
-                    html = html.encode("utf-8")
-                html_bytes.append(len(html))
-                try:
-                    text = render_one(html, row_width)
-                    texts.append(text)
-                    errors.append(None)
-                    text_bytes.append(len(text.encode("utf-8")))
-                except RenderError as e:
-                    texts.append(None)
-                    errors.append(type(e).__name__)
-                    text_bytes.append(0)
-                except Exception as e:  # never kill the task
-                    texts.append(None)
-                    errors.append(f"Fail:{type(e).__name__}")
-                    text_bytes.append(0)
-            out = {
-                "url": urls,
-                "text": texts,
-                "error": errors,
-                "html_bytes": html_bytes,
-                "text_bytes": text_bytes,
-            }
-            for c in passthrough_cols:
-                out[c] = batch[c]
-            yield pd.DataFrame(out)
+        def row(rec, html, row_width=None):
+            text = render(html, width if row_width is None else int(row_width))
+            rec["text"] = text
+            rec["text_bytes"] = len(text.encode("utf-8"))
 
-    return render_batches
+        return row
+
+    return make_row
 
 
 def render_pages(
@@ -174,65 +100,24 @@ def render_pages(
 ) -> DataFrame:
     """Render a pages DataFrame (url, html, ...) to (url, text, error, sizes).
 
-    Only url+html are read — column pruning keeps the scan narrow.
-
-    repartition="none" (default) keeps the scan-aligned file splits — the
-    input never moves through a shuffle before the kernel (measured ~14%
-    faster at local scale, r07; at 100 TB it is the difference between
-    shuffling the corpus once and not).  Correct whenever the input's file
-    layout is not pathologically cost-correlated: a sink-written crawl
-    table is already distributed by an upstream shuffle, and the outlier
-    lane below bounds the one real per-row cost hazard (giant documents)
-    regardless of layout.  repartition="salted" shuffles on
-    xxhash64(url, salt) first — the defensive choice for raw input whose
-    file layout concentrates expensive pages (e.g. per-host dump files),
-    at the cost of moving every html byte through one exchange.
-
-    Outlier-lane scan cost, explicitly: the length predicate cannot push
-    to parquet, so the two filtered branches each read url+html — a
-    second pass over the payload column.  That is a deliberate trade:
-    the render kernel outweighs the scan ~10:1 (BENCH/BASELINE.md puts
-    the scan/shuffle section under 5% of wall), so the extra pass costs
-    a few percent and buys straggler isolation — oversized docs render
-    in their own tasks concurrently with the normal lane instead of
-    serializing at the tail of a mixed task.  When the input already
-    isolates or excludes giants (or carries a precomputed length column
-    upstream), set outlier_bytes=None for the single-scan plan; the
-    mixed-payload router (operators/pdf.extract_mixed_pages), whose
-    routing needs no isolation, is single-scan by construction.
+    Only url+html (and an optional per-row `width` column, NULL → `width`)
+    are read — column pruning keeps the scan narrow.  Partitioning
+    (`repartition`, `num_partitions`, `salt`), the oversized-row lane
+    (`outlier_bytes`, and its second-scan cost) and the error-row contract
+    are the shared seam's: see operators/kernel.py.
     """
-    if repartition not in ("salted", "none"):
-        raise ValueError(f"repartition must be 'salted' or 'none', got {repartition!r}")
-    cols = ["url", "html"]
-    if "width" in df.columns:
-        cols.append("width")
-    pages = df.select(*cols)
-    if outlier_bytes is not None:
-        # coalesce: NULL html must land in the normal lane (→ a NullInput
-        # error row), not silently vanish from both filter branches
-        pages = pages.withColumn(
-            "_oversized",
-            F.coalesce(F.length("html") > outlier_bytes, F.lit(False)),
-        )
-        normal = pages.filter(~F.col("_oversized")).drop("_oversized")
-        oversized = pages.filter(F.col("_oversized")).drop("_oversized")
-    else:
-        normal = pages
-        oversized = None
-
-    n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    n = int(n)
-    key = F.xxhash64(F.col("url"), F.lit(salt))
-    if repartition == "salted":
-        normal = normal.repartition(n, key)
-
-    fn = _render_batch_fn(width, config_kwargs or {}, **(render_kwargs or {}))
-    out = normal.mapInPandas(fn, RENDER_SCHEMA)
-    if oversized is not None:
-        # one oversized doc per task: bound worst-case task memory/time
-        oversized = oversized.repartition(n, key)
-        out = out.unionByName(oversized.mapInPandas(fn, RENDER_SCHEMA))
-    return out
+    args = ("width",) if "width" in df.columns else ()
+    return map_kernel(
+        df,
+        _render_kernel(width, config_kwargs or {}, **(render_kwargs or {})),
+        RENDER_SCHEMA,
+        args=args,
+        size_col="html_bytes",
+        num_partitions=num_partitions,
+        salt=salt,
+        repartition=repartition,
+        outlier_bytes=outlier_bytes,
+    )
 
 
 def render_pages_deduped(
@@ -284,6 +169,7 @@ def render_pages_deduped(
     hashed = df.select(
         "url", F.md5(F.col("html")).alias("content_hash"), "html"
     )
+    make_row = _render_kernel(width, config_kwargs or {})
     if dedup_ratio_threshold is not None:
         stats = hashed.agg(
             F.count("*").alias("n"),
@@ -293,10 +179,10 @@ def render_pages_deduped(
             schema = StructType(
                 RENDER_SCHEMA.fields + [StructField("content_hash", StringType())]
             )
-            fn = _render_batch_fn(
-                width, config_kwargs or {}, passthrough_cols=("content_hash",)
+            return map_kernel(
+                hashed, make_row, schema, size_col="html_bytes",
+                passthrough=("content_hash",),
             )
-            return hashed.mapInPandas(fn, schema)
     if num_partitions:
         # same key as the groupBy below, so the aggregation reuses this
         # exchange instead of adding a second one
@@ -310,12 +196,13 @@ def render_pages_deduped(
     schema = StructType(
         RENDER_SCHEMA.fields + [StructField("urls", ArrayType(StringType()))]
     )
-    fn = _render_batch_fn(
-        width, config_kwargs or {}, passthrough_cols=("urls",)
+    rendered = map_kernel(
+        grouped.withColumnRenamed("content_hash", "url"),
+        make_row,
+        schema,
+        size_col="html_bytes",
+        passthrough=("urls",),
     )
-    rendered = grouped.select(
-        F.col("content_hash").alias("url"), "urls", "html"
-    ).mapInPandas(fn, schema)
     return rendered.select(
         F.explode("urls").alias("url"),
         "text",

@@ -50,19 +50,6 @@ def _parse_warc_headers(raw: bytes) -> dict[str, str]:
     return headers
 
 
-def _split_http_payload(block: bytes) -> bytes:
-    """An application/http;msgtype=response block is status-line + headers +
-    CRLFCRLF + payload; return the decoded payload (the html bytes).
-
-    Real Common Crawl response records carry HTTP framing on the body:
-    `Transfer-Encoding: chunked` (hex chunk-size lines interleaved with the
-    data) and/or `Content-Encoding: gzip|deflate|br`.  Both must be undone
-    before the bytes are HTML; a malformed encoding degrades to the framed
-    body as-is (lossy but never task-fatal)."""
-    payload, _charset, _err = _decode_http_payload(block)
-    return payload
-
-
 def _parse_http_headers(raw: bytes) -> dict[str, str]:
     """Lower-cased header dict from the HTTP header block (status line
     skipped; duplicate headers comma-joined, per RFC 9110 §5.2)."""
@@ -151,7 +138,11 @@ def _decode_http_payload(
     block: bytes,
 ) -> tuple[bytes, str | None, str | None]:
     """(payload, http_charset, ingest_error) — de-frame and decode an
-    HTTP response block.  On any malformed encoding the framed body is
+    HTTP response block (status line + headers + CRLFCRLF + payload).
+    Real Common Crawl response records carry HTTP framing on the body:
+    `Transfer-Encoding: chunked` (hex chunk-size lines interleaved with
+    the data) and/or `Content-Encoding: gzip|deflate|br`; both must be
+    undone before the bytes are HTML.  On any malformed encoding the framed body is
     returned as-is with an error marker, so one hostile record never
     kills an ingest task.  http_charset is the Content-Type charset=
     parameter (lowercased label) when present — the transport-layer

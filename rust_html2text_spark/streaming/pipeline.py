@@ -12,7 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from rust_html2text_spark.operators.render import RENDER_SCHEMA, _render_batch_fn
+from rust_html2text_spark.operators.kernel import map_kernel
+from rust_html2text_spark.operators.render import RENDER_SCHEMA, _render_kernel
 
 
 def stream_pages(
@@ -35,9 +36,11 @@ def stream_pages(
 
 
 def render_stream(pages: DataFrame, width: int = 80, config_kwargs: dict | None = None) -> DataFrame:
-    """Streaming render: same mapInPandas stage as the batch operator."""
-    fn = _render_batch_fn(width, config_kwargs or {})
-    return pages.select("url", "html").mapInPandas(fn, RENDER_SCHEMA)
+    """Streaming render: same seam and render row as the batch operator."""
+    return map_kernel(
+        pages, _render_kernel(width, config_kwargs or {}), RENDER_SCHEMA,
+        size_col="html_bytes",
+    )
 
 
 def crawl_rate_metrics(
@@ -80,25 +83,10 @@ def render_stream_with_ts(pages: DataFrame, width: int = 80) -> DataFrame:
     schema = StructType(
         list(RENDER_SCHEMA.fields) + [StructField("warc_ts", TimestampType())]
     )
-    fn = _render_batch_fn(width, {})
-
-    def batches(it):
-        import pandas as pd
-
-        ts_by_url = {}
-
-        def inner(batch_iter):
-            for batch in batch_iter:
-                for u, t in zip(batch["url"], batch["warc_ts"]):
-                    ts_by_url[u] = t
-                yield batch[["url", "html"]]
-
-        for out in fn(inner(it)):
-            out = out.copy()
-            out["warc_ts"] = out["url"].map(ts_by_url)
-            yield out
-
-    return pages.select("url", "html", "warc_ts").mapInPandas(batches, schema)
+    return map_kernel(
+        pages, _render_kernel(width, {}), schema, size_col="html_bytes",
+        passthrough=("warc_ts",),
+    )
 
 
 def start_render_stream(
@@ -129,24 +117,25 @@ def extract_stream(
     charset_fallback: str = "utf-8",
 ) -> DataFrame:
     """Streaming main-content extraction: the batch extract_pages stage
-    verbatim (shared batch fn — semantics cannot drift), including the
-    opt-in WHATWG charset sniff + encoding lineage."""
-    from rust_html2text_spark.operators.extract import (
-        EXTRACT_SCHEMA,
-        EXTRACT_SNIFF_SCHEMA,
-        _extract_batch_fn,
-    )
+    verbatim (semantics cannot drift), including the opt-in WHATWG charset
+    sniff + encoding lineage; single-scan (no oversized-row lane)."""
+    from rust_html2text_spark.operators.extract import extract_pages
 
-    fn = _extract_batch_fn(width, config_kwargs or {}, charset_sniff, charset_fallback)
-    schema = EXTRACT_SNIFF_SCHEMA if charset_sniff else EXTRACT_SCHEMA
-    return pages.select("url", "html").mapInPandas(fn, schema)
+    return extract_pages(
+        pages,
+        width=width,
+        config_kwargs=config_kwargs,
+        outlier_bytes=None,
+        charset_sniff=charset_sniff,
+        charset_fallback=charset_fallback,
+    )
 
 
 def pdf_extract_stream(pages: DataFrame, page_sep: str = "\f") -> DataFrame:
     """Streaming PDF extraction over a (url, pdf) stream."""
-    from rust_html2text_spark.operators.pdf import PDF_SCHEMA, _pdf_batch_fn
+    from rust_html2text_spark.operators.pdf import extract_pdf_pages
 
-    return pages.select("url", "pdf").mapInPandas(_pdf_batch_fn(page_sep), PDF_SCHEMA)
+    return extract_pdf_pages(pages, page_sep, outlier_bytes=None)
 
 
 def start_extraction_stream(
@@ -172,16 +161,11 @@ def start_extraction_stream(
     elif mode == "pdf":
         out = pdf_extract_stream(pages)
     elif mode == "mixed":
-        from rust_html2text_spark.operators.pdf import (
-            MIXED_SCHEMA,
-            _mixed_batch_fn,
-        )
+        from rust_html2text_spark.operators.pdf import extract_mixed_pages
 
-        out = pages.select("url", "html").mapInPandas(
-            _mixed_batch_fn(
-                width, config_kwargs or {}, "\f", charset_sniff
-            ),
-            MIXED_SCHEMA,
+        out = extract_mixed_pages(
+            pages, width=width, config_kwargs=config_kwargs,
+            charset_sniff=charset_sniff,
         )
     elif mode == "render":
         out = render_stream(pages, width=width, config_kwargs=config_kwargs)

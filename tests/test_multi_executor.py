@@ -39,6 +39,29 @@ stats = render_pages(pages, width=80).agg(
 ).collect()[0]
 assert stats["n"] == 100 and stats["err"] == 0, stats
 
+# the other kernel seams: their row closures must unpickle on a real
+# executor from the shipped zip (the mixed one carries both engines)
+from rust_html2text_spark.operators.extract import extract_pages
+from rust_html2text_spark.operators.pdf import extract_mixed_pages
+from rust_html2text_spark.sources.pdfcorpus import build_pdf
+ex = extract_pages(pages, width=80).agg(
+    F.count("*").alias("n"),
+    F.sum(F.when(F.col("error").isNull(), 0).otherwise(1)).alias("err"),
+).collect()[0]
+assert ex["n"] == 100 and ex["err"] == 0, ex
+mixed_rows = [(r["url"], bytes(r["html"])) for r in pages.limit(20).collect()] + [
+    (f"https://pdf.example.com/{{i}}", build_pdf(i, "some pdf text", "s")) for i in range(20)
+]
+mixed = extract_mixed_pages(
+    spark.createDataFrame(mixed_rows, "url string, html binary"), width=80
+).groupBy("kind").agg(
+    F.count("*").alias("n"),
+    F.sum(F.when(F.col("error").isNull(), 0).otherwise(1)).alias("err"),
+).collect()
+assert sorted((r["kind"], r["n"], r["err"]) for r in mixed) == [
+    ("html", 20, 0), ("pdf", 20, 0)
+], mixed
+
 # WARC ingest through real executors: write archives driver-side, read
 # them back distributed, render, and compare against the parquet path
 from rust_html2text_spark.sources.warc import read_warc_pages, write_warc_file

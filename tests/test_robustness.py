@@ -125,6 +125,23 @@ def _long_line_page(kind: str, n: int) -> bytes:
     return ("<pre>" + body + "</pre>").encode()
 
 
+def _best_of_3(html: bytes, config) -> float:
+    import time
+
+    best = float("inf")
+    for _ in range(3):
+        t0 = time.perf_counter()
+        html_to_text(html, 80, config)
+        best = min(best, time.perf_counter() - t0)
+    return best
+
+
+def _config(name: str):
+    from rust_html2text_spark.engine.api import plain_config, rich_config
+
+    return plain_config() if name == "plain" else rich_config()
+
+
 @pytest.mark.parametrize("kind", ["ascii", "accented", "token"])
 @pytest.mark.parametrize("config_name", ["plain", "rich"])
 def test_long_line_cost_is_linear(kind, config_name):
@@ -133,21 +150,31 @@ def test_long_line_cost_is_linear(kind, config_name):
     grown with `str +=` on an attribute, or a hard wrap that re-slices
     the remainder for every output line, is quadratic and lands at
     30-40x here."""
-    import time
+    config = _config(config_name)
+    small = _best_of_3(_long_line_page(kind, 64 << 10), config)
+    large = _best_of_3(_long_line_page(kind, 512 << 10), config)
+    assert large / small < 24, (small, large)
 
-    from rust_html2text_spark.engine.api import plain_config, rich_config
 
-    config = plain_config() if config_name == "plain" else rich_config()
+def _table_page(kind: str, n: int) -> bytes:
+    """~n bytes of tables: repeated 4-deep nested tables, or one row of
+    n/11 cells (~3k columns at 32 KiB, ~24k at 256 KiB)."""
+    if kind == "nested":
+        block = "<table><tr><td>" * 4 + "alpha beta" + "</td></tr></table>" * 4
+        return ("<html><body>" + block * (n // len(block)) + "</body></html>").encode()
+    cell = "<td>ab</td>"
+    return ("<table><tr>" + cell * (n // len(cell)) + "</tr></table>").encode()
 
-    def best_of_3(n: int) -> float:
-        html = _long_line_page(kind, n)
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            html_to_text(html, 80, config)
-            best = min(best, time.perf_counter() - t0)
-        return best
 
-    small = best_of_3(64 << 10)
-    large = best_of_3(512 << 10)
+@pytest.mark.parametrize("kind", ["nested", "wide"])
+@pytest.mark.parametrize("config_name", ["plain", "rich"])
+def test_table_cost_is_linear(kind, config_name):
+    """The oversized-row lane (operators/kernel.py) routes by byte length,
+    which is sound only while per-row cost grows linearly with bytes.
+    Nested and wide tables are the table-layout shapes most likely to
+    break that: 8x the bytes must cost well under 24x the time (~8-10x
+    measured; a quadratic column or nesting pass would land above 30x)."""
+    config = _config(config_name)
+    small = _best_of_3(_table_page(kind, 32 << 10), config)
+    large = _best_of_3(_table_page(kind, 256 << 10), config)
     assert large / small < 24, (small, large)

@@ -4,6 +4,7 @@ sink, and the streaming path.  One shared local session keeps this fast."""
 from __future__ import annotations
 
 import json
+import os
 from pathlib import Path
 
 import pytest
@@ -1116,3 +1117,246 @@ def test_rolling_hash_extend_consistency(spark):
     got = {r.doc_id: r.he for r in ext.collect()}
     want = {r.doc_id: r.rolling_hash for r in direct.collect()}
     assert got == want
+
+
+def test_render_pages_null_width_renders_at_job_width(spark):
+    """A NULL in the optional per-row `width` column renders at the job
+    width; it used to reach pandas as NaN and kill the task."""
+    from rust_html2text_spark.engine.api import html_to_text
+    from rust_html2text_spark.operators.render import render_pages
+
+    html = b"<p>" + b"word " * 40 + b"</p>"
+    df = spark.createDataFrame(
+        [("a", html, 20), ("b", html, None)], "url string, html binary, width int"
+    ).coalesce(1)
+    out = {r.url: r for r in render_pages(df, width=40).collect()}
+    assert out["a"].text == html_to_text(html, 20) and out["a"].error is None
+    assert out["b"].text == html_to_text(html, 40) and out["b"].error is None
+
+
+def test_render_stream_with_ts_keeps_each_capture_time(spark):
+    """Two captures of one url keep their own warc_ts (it used to be
+    mapped back through a url-keyed dict: last capture seen won)."""
+    import datetime as dt
+
+    from rust_html2text_spark.engine.api import html_to_text
+    from rust_html2text_spark.streaming.pipeline import render_stream_with_ts
+
+    jan, jun = dt.datetime(2024, 1, 1), dt.datetime(2024, 6, 1)
+    df = spark.createDataFrame(
+        [("u", b"<p>a</p>", jan), ("u", b"<p>b</p>", jun)],
+        "url string, html binary, warc_ts timestamp",
+    ).coalesce(1)
+    got = sorted((r.text, r.warc_ts) for r in render_stream_with_ts(df).collect())
+    assert got == [
+        (html_to_text(b"<p>a</p>", 80), jan),
+        (html_to_text(b"<p>b</p>", 80), jun),
+    ]
+
+
+# -- the kernel-operator seam (operators/kernel.py) ---------------------------
+
+# an ordered-list marker wider than any width: TooNarrow in every HTML kernel
+_RAISES_HTML = b'<ol start="1' + b"0" * 100 + b'"><li>x</li></ol>'
+_TRUNCATED_PDF = b"%PDF-1.4\n1 0 obj"
+_PDF_ERROR = "PdfError:no document catalog (/Root)"
+_SMALL_OUTLIER = 2048
+
+
+def _article(paragraphs: int) -> bytes:
+    para = '<p>Some article text with a <a href="/next">next page</a> link.</p>'
+    return f"<html><body><article>{para * paragraphs}</article></body></html>".encode()
+
+
+def _seam_rows(payload: str):
+    """(url, payload) rows: normal, NULL, oversized, raising."""
+    from rust_html2text_spark.sources.pdfcorpus import build_pdf
+
+    html = [_article(1), _article(100), _RAISES_HTML]
+    pdf = [build_pdf(1, "hello world", "s"), build_pdf(2, "big text " * 2000, "s"),
+           _TRUNCATED_PDF]
+    for normal, big, _ in (html, pdf):
+        assert len(normal) < _SMALL_OUTLIER < len(big)
+    rows = []
+    for kind, (normal, big, bad) in (("html", html), ("pdf", pdf)):
+        if payload in (kind, "mixed"):
+            rows += [(f"https://{kind}.example/normal", normal),
+                     (f"https://{kind}.example/big", big),
+                     (f"https://{kind}.example/bad", bad)]
+    return rows + [("https://null.example/", None)]
+
+
+_NULL = "https://null.example/"
+_BAD_HTML, _BAD_PDF = "https://html.example/bad", "https://pdf.example/bad"
+_OUTLIER = ({"outlier_bytes": None}, {"outlier_bytes": _SMALL_OUTLIER})
+_SALT = ({"repartition": "none"}, {"repartition": "salted"})
+
+# operator, payload, variant pairs that must agree, exact error rows
+# (url → field subset; None = the url emits no rows)
+_SEAM_CASES = {
+    "render_pages": ("render", "render_pages", "html", _OUTLIER + _SALT, {
+        _NULL: {"text": None, "error": "NullInput", "html_bytes": 0, "text_bytes": 0},
+        _BAD_HTML: {"text": None, "error": "TooNarrow",
+                    "html_bytes": len(_RAISES_HTML), "text_bytes": 0},
+    }),
+    "render_pages_deduped": ("render", "render_pages_deduped", "html",
+                             ({"dedup_ratio_threshold": None},
+                              {"dedup_ratio_threshold": 1.5}), {
+        _NULL: {"text": None, "error": "NullInput", "html_bytes": 0, "text_bytes": 0},
+        _BAD_HTML: {"text": None, "error": "TooNarrow",
+                    "html_bytes": len(_RAISES_HTML), "text_bytes": 0},
+    }),
+    "extract_pages": ("extract", "extract_pages", "html", _OUTLIER + _SALT, {
+        _NULL: {"text": None, "error": "NullInput", "html_bytes": 0, "text_bytes": 0,
+                "winner_tag": None, "score": None, "n_candidates": 0},
+        _BAD_HTML: {"text": None, "error": "TooNarrow",
+                    "html_bytes": len(_RAISES_HTML), "text_bytes": 0,
+                    "winner_tag": None, "score": None, "n_candidates": 0},
+    }),
+    "extract_pages_full": ("extract", "extract_pages_full", "html", _OUTLIER + _SALT, {
+        _NULL: {"text": None, "error": "NullInput", "html_bytes": 0,
+                "n_candidates": 0, "links_json": None, "title": None},
+        # links + metadata are recovered on a render failure
+        _BAD_HTML: {"text": None, "error": "TooNarrow",
+                    "html_bytes": len(_RAISES_HTML), "n_candidates": 0,
+                    "links_json": "[]", "title": None},
+    }),
+    "extract_links": ("extract", "extract_links", "html", _OUTLIER + _SALT, {
+        _NULL: None, _BAD_HTML: None,
+    }),
+    "page_metadata_pages": ("extract", "page_metadata_pages", "html",
+                            _OUTLIER + _SALT, {
+        _NULL: {"title": None, "canonical": None, "error": "NullInput"},
+    }),
+    "extract_pdf_pages": ("pdf", "extract_pdf_pages", "pdf", _OUTLIER + _SALT, {
+        _NULL: {"text": None, "error": "NullInput", "pdf_bytes": 0, "text_bytes": 0,
+                "n_pages": 0, "pdf_version": None},
+        _BAD_PDF: {"text": None, "error": _PDF_ERROR,
+                   "pdf_bytes": len(_TRUNCATED_PDF), "text_bytes": 0, "n_pages": 0},
+    }),
+    "extract_pdf_links": ("pdf", "extract_pdf_links", "pdf", _SALT, {
+        _NULL: None, _BAD_PDF: None,
+    }),
+    "extract_mixed_pages": ("pdf", "extract_mixed_pages", "mixed", _SALT, {
+        _NULL: {"kind": "html", "text": None, "error": "NullInput",
+                "input_bytes": 0, "text_bytes": 0},
+        _BAD_HTML: {"kind": "html", "text": None, "error": "TooNarrow",
+                    "input_bytes": len(_RAISES_HTML), "text_bytes": 0},
+        _BAD_PDF: {"kind": "pdf", "text": None, "error": _PDF_ERROR,
+                   "input_bytes": len(_TRUNCATED_PDF), "text_bytes": 0},
+    }),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_SEAM_CASES))
+def test_seam_contract(spark, name):
+    """Every seam operator over a normal, a NULL, an oversized and a
+    raising payload: the lanes (outlier routing, salted repartition, or
+    the dedup route) do not change a row, and the NULL and error rows
+    carry their exact values."""
+    import importlib
+
+    module, fn_name, payload, variants, expected = _SEAM_CASES[name]
+    op = getattr(importlib.import_module(f"rust_html2text_spark.operators.{module}"), fn_name)
+    col = "pdf" if payload == "pdf" else "html"
+    rows = _seam_rows(payload)
+    df = spark.createDataFrame(rows, f"url string, {col} binary")
+
+    outputs = [sorted(op(df, **kw).collect(), key=repr) for kw in variants]
+    for other in outputs[1:]:
+        assert other == outputs[0]
+    got = outputs[0]
+    by_url: dict = {}
+    for r in got:
+        by_url.setdefault(r["url"], []).append(r.asDict())
+    for url, want in expected.items():
+        if want is None:
+            assert url not in by_url, by_url[url]
+            continue
+        [row] = by_url[url]
+        assert {k: row[k] for k in want} == want
+    # every other input url went through the kernel cleanly
+    for url, _ in rows:
+        if url not in expected:
+            assert by_url[url] and all(r.get("error") is None for r in by_url[url]), url
+
+
+def test_map_kernel_other_exceptions_become_fail_rows(spark):
+    """Any non-RenderError exception reads Fail:<Type> on a one-row
+    kernel (integer columns 0, the size column the payload length) and
+    drops the page on an edge kernel."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from rust_html2text_spark.operators.kernel import map_kernel
+
+    def make_row():
+        def row(rec, payload):
+            rec["n"] = 1 // (len(payload) - 3)
+
+        return row
+
+    def make_edges():
+        def row(payload):
+            return [(1 // (len(payload) - 3),)]
+
+        return row
+
+    df = spark.createDataFrame(
+        [("a", b"abcd"), ("b", b"abc"), ("c", None)], "url string, html binary"
+    )
+    one = StructType([StructField("url", StringType()), StructField("n", LongType()),
+                      StructField("error", StringType()), StructField("size", LongType())])
+    got = sorted(tuple(r) for r in map_kernel(df, make_row, one, size_col="size").collect())
+    assert got == [("a", 1, None, 4), ("b", 0, "Fail:ZeroDivisionError", 3),
+                   ("c", 0, "NullInput", 0)]
+    edge = StructType([StructField("url", StringType()), StructField("n", LongType())])
+    assert [tuple(r) for r in map_kernel(df, make_edges, edge, edges=True).collect()] == [
+        ("a", 1)
+    ]
+
+
+def test_seam_closures_unpickle_before_the_package_is_importable(
+    spark, tmp_path, monkeypatch
+):
+    """A worker unpickles the mapInPandas closure before its sys.path
+    bootstrap runs, so the closure may reference no package-level code;
+    and an HTML kernel never loads the PDF engine (pdfcrypt loads
+    libcrypto)."""
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from rust_html2text_spark.operators.extract import extract_pages
+    from rust_html2text_spark.operators.pdf import extract_mixed_pages
+    from rust_html2text_spark.operators.render import render_pages
+
+    df = spark.createDataFrame([("u", b"<p>x</p>")], "url string, html binary")
+    captured = []
+    monkeypatch.setattr(
+        type(df), "mapInPandas", lambda self, fn, schema: captured.append(fn) or self
+    )
+    for op in (render_pages, extract_pages, extract_mixed_pages):
+        op(df)
+    probe = (
+        "import pickle, sys, pandas as pd\n"
+        "fn = pickle.loads(open(sys.argv[1], 'rb').read())\n"
+        "assert not [m for m in sys.modules if m.startswith('rust_html2text_spark')]\n"
+        "batch = pd.DataFrame({'url': ['u'], 'html': [b'<p>x</p>']})\n"
+        "[out] = fn(iter([batch]))\n"
+        "pdf = [m for m in sys.modules if m.startswith('rust_html2text_spark.engine.pdf')]\n"
+        "print(out['error'].tolist(), bool(pdf))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    results = []
+    for i, fn in enumerate(dict.fromkeys(captured)):  # one fn per operator
+        path = tmp_path / f"fn{i}.pkl"
+        path.write_bytes(cloudpickle.dumps(fn))
+        res = subprocess.run(
+            [sys.executable, "-c", probe, str(path)],
+            cwd=tmp_path, env=env, capture_output=True, text=True, timeout=120,
+        )
+        assert res.returncode == 0, res.stderr[-2000:]
+        results.append(res.stdout.strip())
+    # render, extract: no PDF engine; mixed: both engines
+    assert results == ["[None] False", "[None] False", "[None] True"]
